@@ -13,10 +13,10 @@ Spec conformance (citations into /root/reference/docs/draft.md):
 Integrity: SHA-256 over the UNCOMPRESSED payload, stored per entry and
 verified after decompression on read — the semantics of the reference's
 compute/verify pair (src/checksum.rs:15-29) without its whole-shard read
-bug (SURVEY.md D4).  Compression: none|gzip always; lz4|zstd|snappy when
-the optional libraries are importable (the reference declares all five but
-implements two — SURVEY.md D9; we gate instead of erroring at write time
-with data loss).
+bug (SURVEY.md D4).  Compression: none|gzip from the standard library,
+lz4|snappy|zstd from pyarrow, a hard dependency (the reference declares
+all five but implements two — SURVEY.md D9).  A corrupt payload raises
+ShardPackCodecError from every decode path.
 
 All integers are little-endian.  Layout (exact bytes, this implementation):
 
@@ -42,17 +42,19 @@ All integers are little-endian.  Layout (exact bytes, this implementation):
 
 from __future__ import annotations
 
-import functools
 import gzip as _gzip
 import hashlib
 import io
 import json
 import os
 import struct
+import zlib
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 
-from shardpack_spark.format import storage, zstd_entropy
+import pyarrow as pa
+
+from shardpack_spark.format import storage
 
 MAGIC = b"SHARDPK1"
 DEFAULT_TARGET_SHARD_BYTES = 256 * 1024 * 1024  # reference src/shard/config.rs:1
@@ -81,260 +83,11 @@ class ShardPackCodecError(ShardPackError):
     pass
 
 
-# --- compression codecs -----------------------------------------------------
-
-def _gzip_c(b: bytes) -> bytes:
-    # mtime=0 -> deterministic output for identical payloads
-    buf = io.BytesIO()
-    with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
-        f.write(b)
-    return buf.getvalue()
-
-
-def _lz4_compress(src: bytes) -> bytes:
-    """LZ4 *block* format (greedy hash-chain-less matcher).
-
-    Pure-Python implementation of the public LZ4 block spec so the codec
-    declared by the reference (src/bucket.rs:16-25) is never dead code in
-    environments without the `lz4` wheel.  Fixes the reference's bounded
-    3x decompression-buffer bug (SURVEY.md D10) by construction: our
-    container tracks the exact uncompressed size per entry.
-    """
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-
-    def emit(lit: bytes, mlen: int, offset: int) -> None:
-        ll, ml = len(lit), mlen - 4 if mlen else 0
-        token = (min(ll, 15) << 4) | (min(ml, 15) if mlen else 0)
-        out.append(token)
-        if ll >= 15:
-            rest = ll - 15
-            while rest >= 255:
-                out.append(255)
-                rest -= 255
-            out.append(rest)
-        out.extend(lit)
-        if mlen:
-            out.append(offset & 0xFF)
-            out.append(offset >> 8)
-            if ml >= 15:
-                rest = ml - 15
-                while rest >= 255:
-                    out.append(255)
-                    rest -= 255
-                out.append(rest)
-
-    table: dict[bytes, int] = {}
-    i = anchor = 0
-    # spec margins: last match must start >= 12 bytes from end; the final
-    # 5 bytes are always literals
-    limit = n - 12
-    while i < limit:
-        seq = src[i : i + 4]
-        j = table.get(seq)
-        table[seq] = i
-        if j is not None and i - j <= 0xFFFF:
-            m, k = i + 4, j + 4
-            stop = n - 5
-            while m < stop and src[m] == src[k]:
-                m += 1
-                k += 1
-            emit(src[anchor:i], m - i, i - j)
-            anchor = i = m
-        else:
-            i += 1
-    emit(src[anchor:], 0, 0)
-    return bytes(out)
-
-
-def _lz4_decompress(src: bytes) -> bytes:
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-    i = 0
-    while i < n:
-        token = src[i]
-        i += 1
-        ll = token >> 4
-        if ll == 15:
-            while True:
-                b = src[i]
-                i += 1
-                ll += b
-                if b != 255:
-                    break
-        out += src[i : i + ll]
-        i += ll
-        if i >= n:
-            break  # final literals-only sequence
-        offset = src[i] | (src[i + 1] << 8)
-        i += 2
-        if offset == 0:
-            raise ShardPackCodecError("lz4: zero match offset")
-        ml = (token & 15) + 4
-        if token & 15 == 15:
-            while True:
-                b = src[i]
-                i += 1
-                ml += b
-                if b != 255:
-                    break
-        start = len(out) - offset
-        if start < 0:
-            raise ShardPackCodecError("lz4: match offset before block start")
-        if offset >= ml:
-            out += out[start : start + ml]
-        else:  # overlapping match: replicate in offset-sized chunks
-            while ml > 0:
-                chunk = out[start : start + min(offset, ml)]
-                out += chunk
-                ml -= len(chunk)
-    return bytes(out)
-
-
-def _snappy_compress(src: bytes) -> bytes:
-    """Snappy raw format: varint length preamble + literal / copy elements.
-
-    Emits literals and 2-byte-offset copies (type-10) only — every
-    decoder accepts that subset; our decoder handles all four element
-    types."""
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-    v = n
-    while True:  # little-endian varint of the uncompressed length
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
-
-    def emit_literal(lit: bytes) -> None:
-        ln = len(lit)
-        if ln == 0:
-            return
-        ln -= 1
-        if ln < 60:
-            out.append(ln << 2)
-        elif ln < 1 << 8:
-            out.append(60 << 2)
-            out.append(ln)
-        elif ln < 1 << 16:
-            out.append(61 << 2)
-            out.extend(ln.to_bytes(2, "little"))
-        elif ln < 1 << 24:
-            out.append(62 << 2)
-            out.extend(ln.to_bytes(3, "little"))
-        else:
-            out.append(63 << 2)
-            out.extend(ln.to_bytes(4, "little"))
-        out.extend(lit)
-
-    def emit_copy(offset: int, mlen: int) -> None:
-        while mlen > 0:  # type-10 copies carry 1..64 bytes each
-            step = min(mlen, 64)
-            out.append(((step - 1) << 2) | 2)
-            out.extend(offset.to_bytes(2, "little"))
-            mlen -= step
-
-    table: dict[bytes, int] = {}
-    i = anchor = 0
-    limit = n - 4
-    while i < limit:
-        seq = src[i : i + 4]
-        j = table.get(seq)
-        table[seq] = i
-        if j is not None and i - j <= 0xFFFF:
-            m, k = i + 4, j + 4
-            while m < n and src[m] == src[k]:
-                m += 1
-                k += 1
-            emit_literal(src[anchor:i])
-            emit_copy(i - j, m - i)
-            anchor = i = m
-        else:
-            i += 1
-    emit_literal(src[anchor:])
-    return bytes(out)
-
-
-def _snappy_decompress(src: bytes) -> bytes:
-    src = bytes(src)
-    n = len(src)
-    # varint preamble
-    length = 0
-    shift = 0
-    i = 0
-    while True:
-        b = src[i]
-        i += 1
-        length |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-    out = bytearray()
-    while i < n:
-        tag = src[i]
-        i += 1
-        typ = tag & 3
-        if typ == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nb = ln - 59
-                ln = int.from_bytes(src[i : i + nb], "little")
-                i += nb
-            ln += 1
-            out += src[i : i + ln]
-            i += ln
-            continue
-        if typ == 1:  # copy, 1-byte offset
-            ml = ((tag >> 2) & 0x7) + 4
-            offset = ((tag >> 5) << 8) | src[i]
-            i += 1
-        elif typ == 2:  # copy, 2-byte offset
-            ml = (tag >> 2) + 1
-            offset = int.from_bytes(src[i : i + 2], "little")
-            i += 2
-        else:  # copy, 4-byte offset
-            ml = (tag >> 2) + 1
-            offset = int.from_bytes(src[i : i + 4], "little")
-            i += 4
-        if offset == 0:
-            raise ShardPackCodecError("snappy: zero copy offset")
-        start = len(out) - offset
-        if start < 0:
-            raise ShardPackCodecError("snappy: copy offset before stream start")
-        if offset >= ml:
-            out += out[start : start + ml]
-        else:
-            while ml > 0:
-                chunk = out[start : start + min(offset, ml)]
-                out += chunk
-                ml -= len(chunk)
-    if len(out) != length:
-        raise ShardPackCodecError(f"snappy: decoded {len(out)} bytes, preamble said {length}")
-    return bytes(out)
-
-
-# --- zstd (pure-Python, RFC 8878) -------------------------------------------
+# --- XXH64 -----------------------------------------------------------------
 #
-# The fallback ENCODER emits real entropy-coded frames: per 128 KiB
-# block it runs zstd_entropy's LZ77 greedy parse + predefined-FSE
-# sequences + canonical-Huffman literals and keeps the Compressed block
-# when it is smaller (RLE for constant runs, Raw otherwise) — so a
-# wheel-free writer gets genuine compression, just at pure-Python speed
-# (hence the one-time "slower" warning below).  The fallback DECODER
-# reads ANY spec-compliant frame: Raw/RLE blocks here, entropy-coded
-# (Compressed) blocks via zstd_entropy (full FSE + Huffman + sequence
-# execution, RFC 8878 §3-4), so data zstd-compressed by pyarrow/libzstd
-# elsewhere stays readable without any wheel.  Only dictionary frames
-# raise (undecodable without the dictionary).
-
-_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-_ZSTD_BLOCK_MAX = 128 * 1024  # Block_Maximum_Size (RFC 8878 §3.1.1.2.3)
+# Not a ShardPack codec: the pure-Python reference for Spark's xxhash64
+# expression, which the hashed classifier features replicate
+# (operators/classifier.py).
 
 _XX_P1 = 0x9E3779B185EBCA87
 _XX_P2 = 0xC2B2AE3D27D4EB4F
@@ -349,7 +102,7 @@ def _rotl64(x: int, r: int) -> int:
 
 
 def _xxh64(data: bytes, seed: int = 0) -> int:
-    """XXH64 (the zstd content checksum is its low 32 bits).
+    """XXH64 of ``data`` under ``seed``.
 
     Cross-checked against Spark's XxHash64 expression in
     tests/test_codec.py, so the two implementations vouch for each other.
@@ -391,249 +144,57 @@ def _xxh64(data: bytes, seed: int = 0) -> int:
     return h
 
 
-_zstd_fallback_warned = False
+# --- compression codecs -----------------------------------------------------
+
+def _gzip_c(b: bytes) -> bytes:
+    # mtime=0 -> deterministic output for identical payloads
+    buf = io.BytesIO()
+    with _gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as f:
+        f.write(b)
+    return buf.getvalue()
 
 
-def _zstd_compress(src: bytes) -> bytes:
-    # Honesty over silence: this pure-Python encoder emits real
-    # entropy-coded frames (LZ77 + predefined-FSE sequences + Huffman
-    # literals via zstd_entropy) but runs 10-100x slower than libzstd
-    # and compresses somewhat less (single-probe greedy parse, no repeat
-    # offsets).  It only engages when neither pyarrow nor zstandard is
-    # importable; say so ONCE per process so a bulk-write deployment
-    # knows why throughput dropped.
-    global _zstd_fallback_warned
-    if not _zstd_fallback_warned:
-        _zstd_fallback_warned = True
-        import warnings
+# pyarrow serves lz4 (the LZ4 *block* format, 'lz4_raw'), raw snappy and
+# zstd.  pa.Codec objects are NOT picklable and this module travels to
+# Python workers by value (datasource._pickle_by_value), so no codec
+# instance lives at module level: each call builds its own (~0.2 us,
+# 80x cheaper than one 32 KiB decompress).  Decompressors take the
+# uncompressed size the container records per entry, which the raw
+# block formats need.
+def _arrow(name: str) -> tuple:
+    def c(b: bytes) -> bytes:
+        return pa.Codec(name).compress(b, asbytes=True)
 
-        warnings.warn(
-            "compression='zstd' is using the pure-Python fallback encoder "
-            "(no pyarrow/zstandard in this environment): frames are real "
-            "entropy-coded zstd, but encoding is 10-100x slower than "
-            "libzstd. Install pyarrow or zstandard for fast compression.",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    out = bytearray(_ZSTD_MAGIC)
-    n = len(src)
-    # Frame_Header_Descriptor: FCS-size flag in bits 7-6, Single_Segment
-    # bit 5 (no Window_Descriptor; window = content size), checksum bit 2.
-    if n <= 0xFF:
-        fcs_flag, fcs = 0, n.to_bytes(1, "little")
-    elif n - 256 <= 0xFFFF:
-        fcs_flag, fcs = 1, (n - 256).to_bytes(2, "little")
-    elif n <= 0xFFFFFFFF:
-        fcs_flag, fcs = 2, n.to_bytes(4, "little")
-    else:
-        fcs_flag, fcs = 3, n.to_bytes(8, "little")
-    out.append((fcs_flag << 6) | (1 << 5) | (1 << 2))
-    out += fcs
-    if n == 0:
-        out += (1).to_bytes(3, "little")  # last=1, Raw, size 0
-    i = 0
-    lz_table: dict = {}  # 4-byte-hash -> recent positions, frame-wide
-    rep = [1, 4, 8]  # §3.1.1.5 repeat-offset history, frame-wide
-    while i < n:
-        chunk = src[i : i + _ZSTD_BLOCK_MAX]
-        start, i = i, i + len(chunk)
-        last = 1 if i >= n else 0
-        if len(chunk) >= 2 and chunk.count(chunk[0]) == len(chunk):
-            # RLE block: size field = regenerated size, content = 1 byte
-            out += (last | (1 << 1) | (len(chunk) << 3)).to_bytes(3, "little")
-            out.append(chunk[0])
-            continue
-        body, rep_out = zstd_entropy.encode_compressed_block(
-            src, start, i, lz_table, rep
-        )
-        if len(body) < len(chunk):
-            out += (last | (2 << 1) | (len(body) << 3)).to_bytes(3, "little")
-            out += body
-            rep = rep_out  # decoder history advances only on decoded blocks
-        else:
-            out += (last | (0 << 1) | (len(chunk) << 3)).to_bytes(3, "little")
-            out += chunk
-    out += (_xxh64(src) & 0xFFFFFFFF).to_bytes(4, "little")
-    return bytes(out)
+    def d(b: bytes, n: int) -> bytes:
+        return pa.Codec(name).decompress(b, n, asbytes=True)
+
+    return c, d
 
 
-_ZSTD_SKIP_LO = 0x184D2A50  # skippable frame magic range (RFC 8878 §3.1.2)
-_ZSTD_SKIP_HI = 0x184D2A5F
-
-
-def _zstd_decompress(src: bytes) -> bytes:
-    # a truncated frame header must fail TYPED like every other corrupt
-    # input (the body's src[i] byte reads raise IndexError on short input)
-    try:
-        return _zstd_decompress_inner(src)
-    except IndexError as e:
-        raise ShardPackCodecError(f"zstd: truncated frame: {e}") from e
-
-
-def _zstd_decompress_inner(src: bytes) -> bytes:
-    """Decode a zstd FILE: one or more concatenated frames, skippable
-    frames ignored — `cat a.zst b.zst` and zstd-CLI outputs with
-    metadata frames decode like the reference implementation, instead of
-    silently truncating after the first frame."""
-    if not src:
-        raise ShardPackCodecError("zstd: empty input")
-    out = bytearray()
-    i = 0
-    while i < len(src):
-        magic = int.from_bytes(src[i : i + 4], "little")
-        if _ZSTD_SKIP_LO <= magic <= _ZSTD_SKIP_HI:
-            if i + 8 > len(src):
-                raise ShardPackCodecError("zstd: truncated skippable frame")
-            size = int.from_bytes(src[i + 4 : i + 8], "little")
-            if i + 8 + size > len(src):
-                raise ShardPackCodecError("zstd: truncated skippable frame")
-            i += 8 + size
-            continue
-        if src[i : i + 4] != _ZSTD_MAGIC:
-            raise ShardPackCodecError("zstd: bad magic")
-        frame, i = _zstd_decode_frame(src, i + 4)
-        out += frame
-    return bytes(out)
-
-
-def _zstd_decode_frame(src: bytes, i: int) -> tuple[bytes, int]:
-    """Decode ONE frame whose header starts at ``i`` (past the magic);
-    returns (content, offset past the frame)."""
-    desc = src[i]
-    i += 1
-    fcs_flag = desc >> 6
-    single_segment = bool(desc & 0x20)
-    has_checksum = bool(desc & 0x04)
-    dict_flag = desc & 0x03
-    if not single_segment:
-        i += 1  # Window_Descriptor
-    if dict_flag:
-        # a dictionary frame is undecodable without its dictionary by
-        # definition — not a fallback limitation
-        did = int.from_bytes(src[i : i + (0, 1, 2, 4)[dict_flag]], "little")
-        if did != 0:
-            raise ShardPackCodecError(f"zstd: dictionary frames unsupported (id {did})")
-    i += (0, 1, 2, 4)[dict_flag]
-    entropy_ctx: dict = {}
-    fcs = None
-    fcs_size = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
-    if fcs_size:
-        fcs = int.from_bytes(src[i : i + fcs_size], "little")
-        if fcs_flag == 1:
-            fcs += 256
-        i += fcs_size
-    out = bytearray()
-    while True:
-        if i + 3 > len(src):
-            # a zero-filled "header" would read as a non-last Raw block of
-            # size 0 and spin forever — truncation must raise, like every
-            # other codec path
-            raise ShardPackCodecError("zstd: truncated frame (missing block header)")
-        hdr = int.from_bytes(src[i : i + 3], "little")
-        i += 3
-        last, btype, bsize = hdr & 1, (hdr >> 1) & 3, hdr >> 3
-        if btype == 0:  # Raw
-            out += src[i : i + bsize]
-            i += bsize
-        elif btype == 1:  # RLE
-            out += src[i : i + 1] * bsize
-            i += 1
-        elif btype == 2:  # Compressed: FSE/Huffman entropy block
-            try:
-                zstd_entropy.decode_compressed_block(src, i, bsize, out, entropy_ctx)
-            except (ValueError, IndexError) as e:
-                raise ShardPackCodecError(f"zstd: corrupt compressed block: {e}") from e
-            i += bsize
-        else:
-            raise ShardPackCodecError("zstd: reserved block type")
-        if last:
-            break
-    if has_checksum:
-        if i + 4 > len(src):
-            raise ShardPackCodecError("zstd: truncated content checksum")
-        want = int.from_bytes(src[i : i + 4], "little")
-        got = _xxh64(bytes(out)) & 0xFFFFFFFF
-        if want != got:
-            raise ShardPackCodecError(f"zstd: content checksum mismatch ({got:#x} != {want:#x})")
-        i += 4
-    if fcs is not None and fcs != len(out):
-        raise ShardPackCodecError(f"zstd: content size {len(out)} != header {fcs}")
-    return bytes(out), i
-
-
-# Decompressors take (stored_bytes, expected_size|None): the container
-# records the uncompressed size per entry, which native codecs (pyarrow)
-# need for raw block formats.
 _CODECS: dict[str, tuple] = {
-    "none": (lambda b: b, lambda b, n=None: b),
-    "gzip": (_gzip_c, lambda b, n=None: _gzip.decompress(b)),
-    # pure-Python, deterministic, env-independent (see functions above)
-    "lz4": (_lz4_compress, lambda b, n=None: _lz4_decompress(b)),
-    "snappy": (_snappy_compress, lambda b, n=None: _snappy_decompress(b)),
-    "zstd": (_zstd_compress, lambda b, n=None: _zstd_decompress(b)),
+    "none": (lambda b: b, lambda b, n: b),
+    "gzip": (_gzip_c, lambda b, n: _gzip.decompress(b)),
+    "lz4": _arrow("lz4_raw"),
+    "snappy": _arrow("snappy"),
+    "zstd": _arrow("zstd"),
 }
 
-try:
-    # Native codecs (pyarrow ships lz4/zstd/snappy): take over the hot
-    # path when importable — ~100x the pure-Python throughput.  Formats
-    # interoperate: pyarrow 'lz4_raw' IS the LZ4 block format the pure
-    # encoder emits, 'snappy' is the standard raw-snappy framing, and
-    # zstd interoperates BOTH ways: pyarrow reads the pure encoder's
-    # Raw/RLE frames, and the pure decoder (zstd_entropy) reads
-    # pyarrow's entropy-coded frames — verified by the cross-codec
-    # matrix in tests/test_codec.py.
-    import pyarrow  # noqa: F401  (probe only — codecs are built lazily)
+# what a codec raises on a corrupt payload: pyarrow's OSError (lz4, zstd)
+# and ArrowInvalid (a ValueError: snappy), gzip's BadGzipFile (an
+# OSError) and EOFError, zlib.error
+_CODEC_FAILURES = (OSError, EOFError, ValueError, zlib.error)
 
-    # pa.Codec objects are NOT picklable, and this module travels to
-    # Python workers via cloudpickle — no module-level codec instances or
-    # caches allowed.  Construction is ~0.2 us (80x cheaper than one
-    # 32 KiB decompress), so just build per call.
-    def _arrow_codec(arrow_name: str):
-        import pyarrow as pa
 
-        return pa.Codec(arrow_name)
-
-    def _lz4_c_native(b: bytes) -> bytes:
-        return _arrow_codec("lz4_raw").compress(b, asbytes=True)
-
-    def _lz4_d_native(b: bytes, n: int | None = None) -> bytes:
-        if n is None:  # raw block format needs the size; pure decoder doesn't
-            return _lz4_decompress(b)
-        return _arrow_codec("lz4_raw").decompress(b, n, asbytes=True)
-
-    def _snappy_c_native(b: bytes) -> bytes:
-        return _arrow_codec("snappy").compress(b, asbytes=True)
-
-    def _snappy_d_native(b: bytes, n: int | None = None) -> bytes:
-        if n is None:
-            return _snappy_decompress(b)
-        return _arrow_codec("snappy").decompress(b, n, asbytes=True)
-
-    def _zstd_c_native(b: bytes) -> bytes:
-        return _arrow_codec("zstd").compress(b, asbytes=True)
-
-    def _zstd_d_native(b: bytes, n: int | None = None) -> bytes:
-        if n is None:
-            return _zstd_decompress(b)
-        return _arrow_codec("zstd").decompress(b, n, asbytes=True)
-
-    _CODECS["lz4"] = (_lz4_c_native, _lz4_d_native)
-    _CODECS["snappy"] = (_snappy_c_native, _snappy_d_native)
-    _CODECS["zstd"] = (_zstd_c_native, _zstd_d_native)
-except ImportError:
-    pass
-
-try:
-    # zstandard lib (if ever installed) wins over pyarrow: full-featured
-    # streaming API and dictionary support.
-    import zstandard as _zstd
-
-    _CODECS["zstd"] = (
-        lambda b: _zstd.ZstdCompressor().compress(b),
-        lambda b, n=None: _zstd.ZstdDecompressor().decompress(b),
-    )
-except ImportError:
-    pass
+def _decode(blob: bytes, codec: str, n: int) -> bytes:
+    """The one decode site: a corrupt payload raises ShardPackCodecError."""
+    if codec not in _CODECS:
+        raise ShardPackCodecError(
+            f"compression '{codec}' not available (have: {sorted(_CODECS)})"
+        )
+    try:
+        return _CODECS[codec][1](blob, n)
+    except _CODEC_FAILURES as e:
+        raise ShardPackCodecError(f"{codec}: corrupt payload: {e}") from e
 
 
 def compress(data: bytes, encoding: str) -> bytes:
@@ -647,14 +208,10 @@ def compress(data: bytes, encoding: str) -> bytes:
     return _CODECS[encoding][0](data)
 
 
-def decompress(data: bytes, encoding: str, expected_size: int | None = None) -> bytes:
+def decompress(data: bytes, encoding: str, expected_size: int) -> bytes:
     if ";chunk=" in encoding:
-        return _decode_chunked(data, encoding.partition(";chunk=")[0])
-    if encoding not in _CODECS:
-        raise ShardPackCodecError(
-            f"compression '{encoding}' not available (have: {sorted(_CODECS)})"
-        )
-    return _CODECS[encoding][1](data, expected_size)
+        return _decode_chunked(data, encoding.partition(";chunk=")[0], expected_size)
+    return _decode(data, encoding, expected_size)
 
 
 # --- chunk-level entry compression (draft.md:144-148) -------------------------
@@ -683,8 +240,6 @@ _CHUNK_MAGIC = b"SPCH"
 
 
 def _encode_chunked(data: bytes, base_codec: str, chunk_bytes: int) -> bytes:
-    import zlib
-
     if chunk_bytes <= 0:
         raise ShardPackCodecError(f"chunk_bytes must be positive, got {chunk_bytes}")
     if base_codec not in _CODECS or base_codec == "none":
@@ -703,30 +258,51 @@ def _encode_chunked(data: bytes, base_codec: str, chunk_bytes: int) -> bytes:
     return head + table + b"".join(comps)
 
 
-def _parse_chunk_container(stored: bytes):
+def _chunk_header(head: bytes, stored_len: int, raw_size: int) -> tuple[int, int, int]:
+    """-> (n_chunks, raw_chunk_bytes, raw_total) from the first 24 stored
+    bytes, checked against the entry around them: corrupt sizes must
+    fail here, typed, not reach a codec or a division."""
+    if len(head) < 24 or head[:4] != _CHUNK_MAGIC:
+        raise ShardPackCodecError("chunked entry payload missing SPCH header")
+    n, cb, total = struct.unpack_from("<IQQ", head, 4)
+    if (
+        cb <= 0
+        or total != raw_size
+        or n != max(1, -(-total // cb))
+        or 24 + 12 * n > stored_len
+    ):
+        raise ShardPackCodecError(
+            f"corrupt chunk container header (n={n}, chunk={cb}, total={total})"
+        )
+    return n, cb, total
+
+
+def _chunk_table(raw: bytes, n: int, stored_len: int) -> list[tuple[int, int]]:
+    """-> [(comp_len, crc32)] for the ``n`` chunks; the lengths must
+    exactly fill the stored payload after the table."""
+    table = [struct.unpack_from("<QI", raw, 12 * i) for i in range(n)]
+    if sum(clen for clen, _ in table) != stored_len - 24 - 12 * n:
+        raise ShardPackCodecError("corrupt chunk table: lengths do not fill the payload")
+    return table
+
+
+def _parse_chunk_container(stored: bytes, raw_size: int):
     """-> (n_chunks, raw_chunk_bytes, raw_total, [(comp_len, crc)],
     payload_base_offset)."""
-    if stored[:4] != _CHUNK_MAGIC:
-        raise ShardPackCodecError("chunked entry payload missing SPCH magic")
-    n, cb, total = struct.unpack_from("<IQQ", stored, 4)
-    table = [
-        struct.unpack_from("<QI", stored, 24 + 12 * i) for i in range(n)
-    ]
+    n, cb, total = _chunk_header(stored[:24], len(stored), raw_size)
+    table = _chunk_table(stored[24 : 24 + 12 * n], n, len(stored))
     return n, cb, total, table, 24 + 12 * n
 
 
-def _decode_chunked(stored: bytes, base_codec: str) -> bytes:
-    import zlib
-
-    n, cb, total, table, base = _parse_chunk_container(stored)
+def _decode_chunked(stored: bytes, base_codec: str, raw_size: int) -> bytes:
+    n, cb, total, table, base = _parse_chunk_container(stored, raw_size)
     out = []
     pos = base
     for i, (clen, crc) in enumerate(table):
         blob = stored[pos : pos + clen]
         if zlib.crc32(blob) & 0xFFFFFFFF != crc:
             raise ShardPackChecksumError(f"chunk {i} crc32 mismatch")
-        raw_len = min(cb, total - i * cb)
-        out.append(_CODECS[base_codec][1](blob, raw_len))
+        out.append(_decode(blob, base_codec, min(cb, total - i * cb)))
         pos += clen
     data = b"".join(out)
     if len(data) != total:
@@ -1102,18 +678,9 @@ def read_entry_slice(
                 f.seek(data_pos + start)
                 return f.read(want)
             if ";chunk=" in enc:
-                import zlib
-
                 base_codec = enc.partition(";chunk=")[0]
-                head = f.read(24)
-                if head[:4] != _CHUNK_MAGIC:
-                    raise ShardPackCodecError(
-                        f"entry '{name}': chunked tag without SPCH container"
-                    )
-                n, cb, total = struct.unpack("<IQQ", head[4:24])
-                table = [
-                    struct.unpack("<QI", f.read(12)) for _ in range(n)
-                ]
+                n, cb, total = _chunk_header(f.read(24), data_len, file_size)
+                table = _chunk_table(f.read(12 * n), n, data_len)
                 payload_base = data_pos + 24 + 12 * n
                 c0 = start // cb
                 c1 = (start + want - 1) // cb
@@ -1127,8 +694,7 @@ def read_entry_slice(
                         raise ShardPackChecksumError(
                             f"entry '{name}': chunk {i} crc32 mismatch"
                         )
-                    raw_len = min(cb, total - i * cb)
-                    out.append(_CODECS[base_codec][1](blob, raw_len))
+                    out.append(_decode(blob, base_codec, min(cb, total - i * cb)))
                 raw = b"".join(out)
                 off = start - c0 * cb
                 return raw[off : off + want]

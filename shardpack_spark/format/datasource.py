@@ -1295,7 +1295,6 @@ def _pickle_by_value() -> None:
     from shardpack_spark.format import manifest as manifest_mod
     from shardpack_spark.format import storage as storage_mod
     from shardpack_spark.format import writer as writer_mod
-    from shardpack_spark.format import zstd_entropy as zstd_mod
 
     # order matters only in that EVERY module codec references at module
     # level must be registered too — by-value registration is not
@@ -1303,7 +1302,6 @@ def _pickle_by_value() -> None:
     # surfaces as executor-side ModuleNotFoundError in vanilla sessions
     for mod in (
         storage_mod,
-        zstd_mod,
         codec_mod,
         manifest_mod,
         commit_mod,

@@ -134,8 +134,7 @@ def q02_shardpack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = "sim://" + tempfile.mkdtemp(prefix="shardpack_rt_")
     docs = load_table(spark, sf_dir, "documents")
     rows = docs_as_shardpack_rows(docs)
-    # lz4 (pyarrow-native when importable, pure-Python block codec
-    # otherwise) so a compressed round-trip is part of the declared,
+    # lz4 so a compressed round-trip is part of the declared,
     # driver-checked surface — not just a pytest case
     writer_opts = {
         "target_shard_bytes": 256 * 1024,

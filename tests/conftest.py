@@ -42,3 +42,21 @@ def sp_rows():
         )
 
     return _build
+
+
+# A green default lane is not full coverage: say how many `slow` tests
+# the `-m 'not slow'` addopts left out (run them with `-m ''`).
+_SLOW_DESELECTED = pytest.StashKey[int]()
+
+
+def pytest_deselected(items):
+    if items:
+        stash = items[0].config.stash
+        slow = sum(1 for item in items if item.get_closest_marker("slow"))
+        stash[_SLOW_DESELECTED] = stash.get(_SLOW_DESELECTED, 0) + slow
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    slow = config.stash.get(_SLOW_DESELECTED, 0)
+    if slow:
+        terminalreporter.write_line(f"{slow} slow tests deselected; run them with -m ''")

@@ -91,6 +91,53 @@ def test_compressed_round_trip(spark_ds, sf_dir, tmp_path):
     assert back.select(F.element_at("entries", 1)["encoding"].alias("e")).distinct().head()["e"] == "gzip"
 
 
+_VANILLA_ROUND_TRIP = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from shardpack_spark.format.datasource import SCHEMA, read_shardpack, register
+
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+register(spark)
+rows = [(f"k/{i:03d}", {"i": str(i)},
+         [("d.bin", "application/octet-stream", "none", 300, bytes([i]) * 300)])
+        for i in range(40)]
+out = sys.argv[2]
+spark.createDataFrame(rows, SCHEMA).repartition(2).write.format("shardpack") \\
+    .option("compression", "zstd").mode("overwrite").save(out)
+got = read_shardpack(spark, out).collect()
+assert sorted((r.key, bytes(r.entries[0].data)) for r in got) == \\
+    [(k, e[0][4]) for k, _, e in rows], "round trip differs"
+assert {r.entries[0].encoding for r in got} == {"zstd"}
+spark.stop()
+print("OK")
+"""
+
+
+def test_vanilla_session_ships_format_modules(tmp_path):
+    """The by-value module list is complete: a vanilla local[2] session
+    whose Python workers cannot import shardpack_spark (the driver adds
+    it only through sys.path) writes and reads a zstd dataset.  A module
+    the shipped format code imports but _pickle_by_value misses fails
+    here with ModuleNotFoundError in a worker."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.abspath(p) != repo
+    )
+    script = tmp_path / "vanilla.py"
+    script.write_text(_VANILLA_ROUND_TRIP)
+    out = subprocess.run(
+        [sys.executable, str(script), repo, str(tmp_path / "ds")],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env, timeout=600,
+    )
+    assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-4000:]
+
+
 def test_key_filter_prunes_partitions(spark_ds, sf_dir, tmp_path):
     """EqualTo('key') pushdown prunes shards via manifest key ranges."""
     out = str(tmp_path / "ds")

@@ -673,25 +673,6 @@ def test_max_record_bytes_option(spark, tmp_path, sp_rows):
     assert ds.read_shardpack(spark, path).count() == 1
 
 
-def test_zstd_pure_fallback_warns():
-    codec._zstd_fallback_warned = False
-    try:
-        # the warning says SLOWER, not uncompressed: the fallback encoder
-        # emits real entropy-coded frames since the encoding half of
-        # zstd_entropy landed
-        with pytest.warns(RuntimeWarning, match="slower"):
-            frame = codec._zstd_compress(b"hello world" * 10)
-        assert codec._zstd_decompress(frame) == b"hello world" * 10
-        # one-time: no second warning
-        import warnings as _w
-
-        with _w.catch_warnings():
-            _w.simplefilter("error")
-            codec._zstd_compress(b"again")
-    finally:
-        codec._zstd_fallback_warned = True
-
-
 # --- convert_to_dataset: distributed adoption of log-less directories ---------
 
 

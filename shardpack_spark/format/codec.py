@@ -46,6 +46,7 @@ import gzip as _gzip
 import hashlib
 import io
 import json
+import operator
 import os
 import struct
 import zlib
@@ -57,6 +58,9 @@ import pyarrow as pa
 from shardpack_spark.format import storage
 
 MAGIC = b"SHARDPK1"
+_FOOTER_BYTES = 8 + len(MAGIC)  # u64 index_start + magic
+_MIN_INDEX_BYTES = 8 + 4 + _FOOTER_BYTES  # n_records, shard_meta_len, footer
+_MIN_BLOCK_BYTES = 8 + 4 + 4 + 4  # record_size, key_len, meta_len, n_entries
 DEFAULT_TARGET_SHARD_BYTES = 256 * 1024 * 1024  # reference src/shard/config.rs:1
 # NOTE: no precompiled struct.Struct objects at module level — the
 # whole module is cloudpickled by value into Spark plans and Struct
@@ -399,18 +403,34 @@ def decode_record(
     names; others come back header-only (data=b"", true declared_size) —
     the modality-selective read: a text loader over image+caption
     records pays zero image decompression.
+
+    A corrupt block raises ShardPackCodecError (ShardPackChecksumError
+    when a payload fails its sha256), never a struct, unicode or JSON
+    error: every variable-length field is checked to stay inside the
+    block before it is sliced.
     """
+    try:
+        return _decode_record(
+            buf, pos, verify_checksums, skip_payload, skip_entries, entry_names
+        )
+    except (struct.error, ValueError) as e:  # truncated field, bad utf-8/JSON
+        raise ShardPackCodecError(f"record at {pos}: corrupt block: {e}") from e
+
+
+def _decode_record(buf, pos, verify_checksums, skip_payload, skip_entries, entry_names):
     (record_size,) = struct.unpack_from("<Q", buf, pos)
     end = pos + record_size
+    if record_size < _MIN_BLOCK_BYTES or end > len(buf):
+        raise ShardPackCodecError(f"record at {pos}: size {record_size} overruns the buffer")
     p = pos + 8
 
     def lp() -> bytes:
         nonlocal p
         (n,) = struct.unpack_from("<I", buf, p)
-        p += 4
-        out = buf[p : p + n]
-        p += n
-        return out
+        p += 4 + n
+        if p > end:
+            raise ShardPackCodecError(f"record at {pos}: field of {n} bytes overruns the block")
+        return buf[p - n : p]
 
     key = lp().decode("utf-8")
     meta_b = lp()
@@ -430,6 +450,8 @@ def decode_record(
         p += 32
         (data_len,) = struct.unpack_from("<Q", buf, p)
         p += 8
+        if p + data_len > end:
+            raise ShardPackCodecError(f"entry '{name}': {data_len} stored bytes overrun the block")
         if skip_payload or (entry_names is not None and name not in entry_names):
             p += data_len  # seek past the stored bytes: no copy, no decode
             entries.append(
@@ -563,33 +585,90 @@ class ShardIndex:
     index_start: int
 
 
-def read_index(path: str) -> ShardIndex:
-    """Load only the EOF index: one tail read, no record payloads.
+def _footer(f, path: str) -> tuple[int, int]:
+    """-> (index_start, size) of the open shard ``f``, checked: the magic
+    footer is there and the EOF index at ``index_start`` has room for its
+    record count, shard-metadata length and footer.  Every index read
+    starts here, so they all agree on what a sound shard is.
 
     Size comes from seek-to-end on the already-open handle, not a
     separate stat — one round trip fewer per shard on object stores."""
-    with storage.for_path(path).open_read(path) as f:
-        f.seek(0, 2)
-        size = f.tell()
-        if size < 16 + len(MAGIC):
-            raise ShardPackIndexError(f"{path}: too small to be a shardpack file")
-        f.seek(size - 8 - len(MAGIC))
-        tail = f.read(8 + len(MAGIC))
-        if tail[8:] != MAGIC:
-            raise ShardPackIndexError(f"{path}: bad magic footer")
-        (index_start,) = struct.unpack("<Q", tail[:8])
-        if index_start >= size:
-            raise ShardPackIndexError(f"{path}: index offset {index_start} out of range")
-        f.seek(index_start)
-        idx = f.read(size - index_start)
-    (n_records,) = struct.unpack_from("<Q", idx, 0)
-    offsets = list(struct.unpack_from(f"<{n_records}Q", idx, 8))
-    p = 8 + 8 * n_records
+    f.seek(0, 2)
+    size = f.tell()
+    if size < _MIN_INDEX_BYTES:
+        raise ShardPackIndexError(f"{path}: too small to be a shardpack file")
+    f.seek(size - _FOOTER_BYTES)
+    tail = f.read(_FOOTER_BYTES)
+    if tail[8:] != MAGIC:
+        raise ShardPackIndexError(f"{path}: bad magic footer")
+    (index_start,) = struct.unpack("<Q", tail[:8])
+    if index_start > size - _MIN_INDEX_BYTES:
+        raise ShardPackIndexError(f"{path}: index offset {index_start} out of range")
+    return index_start, size
+
+
+def _record_count(path: str, head: bytes, index_start: int, size: int) -> int:
+    """The record count that opens the EOF index, checked to fit it."""
+    (n,) = struct.unpack_from("<Q", head)
+    if index_start + _MIN_INDEX_BYTES + 8 * n > size:
+        raise ShardPackIndexError(f"{path}: record count {n} does not fit the EOF index")
+    return n
+
+
+def _read_offsets(f, path: str) -> tuple[list[int], int, bytes]:
+    """-> (offsets, index_start, shard metadata bytes) of the open shard
+    ``f``: the footer, then the EOF index in one read.  Offsets must
+    strictly increase and stay inside the record region [0, index_start)."""
+    index_start, size = _footer(f, path)
+    f.seek(index_start)
+    idx = f.read(size - _FOOTER_BYTES - index_start)
+    n = _record_count(path, idx, index_start, size)
+    offsets = list(struct.unpack_from(f"<{n}Q", idx, 8))
+    if offsets and (
+        offsets[-1] >= index_start or not all(map(operator.lt, offsets, offsets[1:]))
+    ):
+        raise ShardPackIndexError(
+            f"{path}: offset table does not increase inside [0, {index_start})"
+        )
+    p = 8 + 8 * n
     (meta_len,) = struct.unpack_from("<I", idx, p)
-    p += 4
-    meta_b = idx[p : p + meta_len]
-    shard_metadata = json.loads(meta_b) if meta_b else {}
+    if p + 4 + meta_len != len(idx):
+        raise ShardPackIndexError(f"{path}: shard metadata length {meta_len} does not fit the EOF index")
+    return offsets, index_start, idx[p + 4 :]
+
+
+def read_index(path: str) -> ShardIndex:
+    """Load only the EOF index: a footer read and one index read, no
+    record payloads.  A corrupt index raises ShardPackIndexError."""
+    with storage.for_path(path).open_read(path) as f:
+        offsets, index_start, meta_b = _read_offsets(f, path)
+    try:
+        shard_metadata = json.loads(meta_b) if meta_b else {}
+    except ValueError as e:
+        raise ShardPackIndexError(f"{path}: corrupt shard metadata: {e}") from e
     return ShardIndex(offsets=offsets, shard_metadata=shard_metadata, index_start=index_start)
+
+
+def _block_size(f, path: str, offset: int, region_end: int) -> int:
+    """Size field of the record block at ``offset`` of the open shard
+    ``f``, which is left just past it.  Offset and size must keep the
+    block inside the record region [0, region_end), so garbage fails
+    typed instead of reading past the block."""
+    if offset > region_end - _MIN_BLOCK_BYTES:
+        raise ShardPackIndexError(f"{path}: record offset {offset} outside [0, {region_end})")
+    f.seek(offset)
+    (record_size,) = struct.unpack("<Q", f.read(8))
+    if not _MIN_BLOCK_BYTES <= record_size <= region_end - offset:
+        raise ShardPackCodecError(
+            f"{path}: record at {offset} claims {record_size} bytes, past its block"
+        )
+    return record_size
+
+
+def _read_block(f, path: str, offset: int, region_end: int) -> bytes:
+    """The whole record block at ``offset`` of the open shard ``f``."""
+    record_size = _block_size(f, path, offset, region_end)
+    return struct.pack("<Q", record_size) + f.read(record_size - 8)
 
 
 def read_record_at(
@@ -603,17 +682,67 @@ def read_record_at(
     """O(1) random access: seek to the offset-table position (draft.md:167-175).
 
     Reads the block header first, then exactly the block — a partial read,
-    fixing the reference's whole-shard fetch (SURVEY.md D4).
+    fixing the reference's whole-shard fetch (SURVEY.md D4).  The block
+    must end before the smallest possible EOF index; the file size gives
+    that bound without a footer read (one request fewer on object stores).
     """
     with storage.for_path(path).open_read(path) as f:
-        f.seek(offset)
-        head = f.read(8)
-        (record_size,) = struct.unpack("<Q", head)
-        rest = f.read(record_size - 8)
+        f.seek(0, 2)
+        block = _read_block(f, path, offset, f.tell() - _MIN_INDEX_BYTES)
     rec, _ = decode_record(
-        head + rest, 0, verify_checksums, skip_payload, skip_entries, entry_names
+        block, 0, verify_checksums, skip_payload, skip_entries, entry_names
     )
     return rec
+
+
+def read_nth_record(
+    path: str,
+    n: int,
+    verify_checksums: bool = True,
+    entry_names: "set[str] | frozenset[str] | None" = None,
+) -> Record:
+    """Record ``n`` of a shard through ONE handle: the footer, the record
+    count, the one 8-byte offset slot, then the block.  No offset-table
+    list and no shard-metadata JSON — the map-style ``ds[i]`` path."""
+    with storage.for_path(path).open_read(path) as f:
+        index_start, size = _footer(f, path)
+        f.seek(index_start)
+        count = _record_count(path, f.read(8), index_start, size)
+        if not 0 <= n < count:
+            raise ShardPackIndexError(f"{path}: record {n} out of range [0, {count})")
+        f.seek(index_start + 8 + 8 * n)
+        (offset,) = struct.unpack("<Q", f.read(8))
+        block = _read_block(f, path, offset, index_start)
+    rec, _ = decode_record(block, 0, verify_checksums, entry_names=entry_names)
+    return rec
+
+
+def iter_keys(path: str) -> Iterator[tuple[int, str]]:
+    """``(offset, key)`` of every record block, in shard order: the key scan.
+
+    Reads the EOF index, then the record region [0, index_start) in ONE
+    ranged read (object stores bill per request), and parses only each
+    block's size field and key: no metadata JSON, no payload copy, no
+    decode, no sha256.  Key-directed reads then decode just the blocks
+    they want with ``read_record_at``."""
+    with storage.for_path(path).open_read(path) as f:
+        offsets, index_start, _ = _read_offsets(f, path)
+        f.seek(0)
+        buf = f.read(index_start)
+    for off, end in zip(offsets, offsets[1:] + [index_start]):
+        if end - off < _MIN_BLOCK_BYTES:
+            raise ShardPackIndexError(f"{path}: record at {off} is shorter than a block header")
+        record_size, key_len = struct.unpack_from("<QI", buf, off)
+        if record_size != end - off or key_len > record_size - _MIN_BLOCK_BYTES:
+            raise ShardPackCodecError(
+                f"{path}: record at {off}: size {record_size} or key length "
+                f"{key_len} overruns its {end - off}-byte block"
+            )
+        try:
+            key = buf[off + 12 : off + 12 + key_len].decode("utf-8")
+        except UnicodeDecodeError as e:
+            raise ShardPackCodecError(f"{path}: record at {off}: key is not utf-8") from e
+        yield off, key
 
 
 def read_entry_slice(
@@ -753,15 +882,17 @@ def iter_records(
         if skip_entries and avg > 64 * 1024:
             with storage.for_path(path).open_read(path) as f:
                 for off in offsets:
-                    f.seek(off)
-                    head = f.read(8)
-                    (record_size,) = struct.unpack("<Q", head)
+                    record_size = _block_size(f, path, off, idx.index_start)
                     # key+metadata sit at the block head; 4 KiB covers the
                     # overwhelming case, extend only when lengths demand it
                     chunk = f.read(min(record_size - 8, 4096))
 
                     def ensure(n: int) -> None:
                         nonlocal chunk
+                        if n > record_size - 8:
+                            raise ShardPackCodecError(
+                                f"{path}: record at {off}: header overruns its block"
+                            )
                         if len(chunk) < n:  # f is positioned right after chunk
                             chunk += f.read(n - len(chunk))
 
@@ -770,13 +901,13 @@ def iter_records(
                     ensure(8 + key_len)
                     (meta_len,) = struct.unpack_from("<I", chunk, 4 + key_len)
                     ensure(8 + key_len + meta_len)
-                    key = chunk[4 : 4 + key_len].decode("utf-8")
                     meta_b = chunk[8 + key_len : 8 + key_len + meta_len]
-                    yield Record(
-                        key=key,
-                        entries=[],
-                        metadata=json.loads(meta_b) if meta_b else {},
-                    )
+                    try:
+                        key = chunk[4 : 4 + key_len].decode("utf-8")
+                        metadata = json.loads(meta_b) if meta_b else {}
+                    except ValueError as e:  # bad utf-8 or JSON
+                        raise ShardPackCodecError(f"{path}: record at {off}: {e}") from e
+                    yield Record(key=key, entries=[], metadata=metadata)
             return
         buf = storage.for_path(path).read_bytes(path, 0, idx.index_start)
         pos = 0

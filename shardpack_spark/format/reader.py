@@ -28,12 +28,15 @@ graph is import-audited pyspark-free by tests/test_reader_facade.py.
     ds.read_record_at_offset(shard, off)  # O(1) seek
 
 Scale shape: ``records()`` streams shard by shard (one ranged read per
-shard, constant memory); ``lookup`` opens only bloom/range-surviving
-shards; ``__getitem__`` resolves through per-shard record counts from
-the manifest (metadata-only) and one EOF-index tail read for the owning
-shard.  The patch overlay is O(patched keys) in memory — small by
-construction (compact_patches folds them down); ``patches="error"``
-refuses datasets where that assumption broke.
+shard, constant memory).  ``lookup`` opens only bloom/range-surviving
+shards, key-scans each (``codec.iter_keys``: one ranged read, key
+fields parsed, nothing decoded) and decodes only the matching blocks.
+``__getitem__`` resolves through per-shard record counts from the
+manifest (metadata-only), then reads the owning shard through one
+handle: footer, one offset slot, the block.  The patch overlay is
+O(patched keys) in memory — small by construction (compact_patches
+folds them down); ``patches="error"`` refuses datasets where that
+assumption broke.
 """
 
 from __future__ import annotations
@@ -367,37 +370,47 @@ class Dataset:
 
     def _key_has_base_row(self, key: str) -> bool:
         """Does ANY visible shard hold a base row for ``key``?  Bloom +
-        range pruning first, then a metadata-only scan of surviving
-        shards; memoized per key set."""
+        range pruning first, then a key scan of surviving shards;
+        memoized per key set."""
         cache = getattr(self, "_base_presence", None)
         if cache is None:
             cache = self._base_presence = {}
         if key in cache:
             return cache[key]
-        hashes = manifest._bloom_key_hashes(key)
-        present = False
+        present = any(
+            k == key
+            for sp, _ in self._candidate_shards([key])
+            for _, k in codec.iter_keys(sp)
+        )
+        cache[key] = present
+        return present
+
+    def _candidate_shards(self, keys) -> "Iterator[tuple[str, set[str]]]":
+        """``(shard path, keys it may hold)`` for every visible shard, in
+        name order, whose manifest [min,max] key range and Bloom filter
+        admit at least one of ``keys`` — the one pruning pipeline behind
+        lookup, lookup_many, metadata and _key_has_base_row.  A shard
+        without stats admits every key (pruning is only an optimization)."""
+        hashes = {k: manifest._bloom_key_hashes(k) for k in keys}
         for name in self._names:
             s = self._stats.get(name, {})
             kmin, kmax = s.get("min_key"), s.get("max_key")
-            if kmin is not None and kmax is not None and not (kmin <= key <= kmax):
-                continue
+            cand = {
+                k for k in hashes if kmin is None or kmax is None or kmin <= k <= kmax
+            }
             bloom = s.get("bloom")
-            if bloom:
+            if cand and bloom:
                 try:
                     bits = base64.b64decode(bloom.get("bits", ""))
-                except Exception:
-                    bits = b""
-                if not manifest._bloom_maybe_contains(bloom, bits, key, hashes):
-                    continue
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(sp, verify_checksums=False, skip_entries=True):
-                if rec.key == key:
-                    present = True
-                    break
-            if present:
-                break
-        cache[key] = present
-        return present
+                except (TypeError, ValueError):
+                    bits = b""  # a malformed filter prunes nothing
+                cand = {
+                    k
+                    for k in cand
+                    if manifest._bloom_maybe_contains(bloom, bits, k, hashes[k])
+                }
+            if cand:
+                yield os.path.join(self.path, name), cand
 
     def to_batches(
         self,
@@ -497,8 +510,12 @@ class Dataset:
         (src/bucket.rs:147-169) served from manifest stats: shards whose
         [min,max] key range excludes the key are skipped, surviving
         shards are vetoed by their Bloom filter, and only then are
-        shard bytes touched.  Returns every matching record (the format
-        permits duplicate keys), overlaid by patches.
+        shard bytes touched: a key scan of each survivor, then a decode
+        of the matching blocks alone.  Returns every matching record in
+        shard order (the format permits duplicate keys), overlaid by
+        patches.  With ``verify_checksums`` every RETURNED record is
+        sha256-checked; records that merely share its shard are not
+        decoded at all.
 
         Delegates to :meth:`lookup_many` — ONE pruning pipeline, so the
         single- and batched-lookup paths cannot drift apart (the
@@ -513,9 +530,10 @@ class Dataset:
         serial ``lookup`` calls — each Bloom-pruned to ~one shard, but a
         shard naming many of the values is re-read once per value.  Here
         every key is pruned against each shard's [min,max] range + Bloom
-        first, then each shard with ≥1 candidate is scanned once for ALL
-        its candidates.  Returns ``{key: [records]}`` (missing keys map
-        to []), identical to ``{k: self.lookup(k) for k in keys}``
+        first, then each shard with ≥1 candidate is key-scanned once for
+        ALL its candidates (``codec.iter_keys``) and only the matching
+        blocks are decoded.  Returns ``{key: [records]}`` (missing keys
+        map to []), identical to ``{k: self.lookup(k) for k in keys}``
         including patch-overlay semantics."""
         out: dict[str, list[codec.Record]] = {k: [] for k in keys}
         overlay = self._load_overlay()
@@ -529,38 +547,17 @@ class Dataset:
                 rest.add(k)
         if not rest:
             return out
-        hashes = {k: manifest._bloom_key_hashes(k) for k in rest}
-        for name in self._names:
-            s = self._stats.get(name, {})
-            kmin, kmax = s.get("min_key"), s.get("max_key")
-            bloom = s.get("bloom")
-            bits = b""
-            if bloom:
-                try:
-                    bits = base64.b64decode(bloom.get("bits", ""))
-                except Exception:
-                    bits = b""
-            cand = {
-                k
-                for k in rest
-                if not (
-                    kmin is not None and kmax is not None and not (kmin <= k <= kmax)
-                )
-                and not (
-                    bloom
-                    and not manifest._bloom_maybe_contains(bloom, bits, k, hashes[k])
-                )
-            }
-            if not cand:
-                continue
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(
-                sp,
-                verify_checksums=self.verify_checksums,
-                entry_names=self.entry_names,
-            ):
-                if rec.key in cand:
-                    out[rec.key].append(rec)
+        for sp, cand in self._candidate_shards(rest):
+            for off, key in codec.iter_keys(sp):
+                if key in cand:
+                    out[key].append(
+                        codec.read_record_at(
+                            sp,
+                            off,
+                            verify_checksums=self.verify_checksums,
+                            entry_names=self.entry_names,
+                        )
+                    )
         return out
 
     def metadata(self, key: str) -> dict | None:
@@ -570,24 +567,10 @@ class Dataset:
         if overlay and key in overlay:
             rec = overlay[key]
             return None if rec is _TOMBSTONE else dict(rec.metadata)
-        hashes = manifest._bloom_key_hashes(key)
-        for name in self._names:
-            s = self._stats.get(name, {})
-            kmin, kmax = s.get("min_key"), s.get("max_key")
-            if kmin is not None and kmax is not None and not (kmin <= key <= kmax):
-                continue
-            bloom = s.get("bloom")
-            if bloom:
-                try:
-                    bits = base64.b64decode(bloom.get("bits", ""))
-                except Exception:
-                    bits = b""
-                if not manifest._bloom_maybe_contains(bloom, bits, key, hashes):
-                    continue
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(sp, verify_checksums=False, skip_entries=True):
-                if rec.key == key:
-                    return dict(rec.metadata)
+        for sp, _ in self._candidate_shards([key]):
+            for off, k in codec.iter_keys(sp):
+                if k == key:
+                    return codec.read_record_at(sp, off, skip_entries=True).metadata
         return None
 
     # --- loader ergonomics ---------------------------------------------------
@@ -600,12 +583,14 @@ class Dataset:
         return self._cum_counts[-1] if self._cum_counts else 0
 
     def __getitem__(self, i: int) -> codec.Record:
-        """Global physical record index -> record, resolved with one
-        EOF-index read of the owning shard (counts come from the
-        manifest; log-less directories pay one index read per shard the
-        first time).  The map-style access pattern every PyTorch-like
-        loader wants; tombstoned keys raise KeyError so samplers learn
-        to re-draw (use records() for streaming loaders)."""
+        """Global physical record index -> record (negative indices count
+        from the end).  Counts come from the manifest (log-less
+        directories pay one index read per shard the first time); the
+        owning shard is then read through ONE handle — footer, the one
+        8-byte offset slot, the block (``codec.read_nth_record``).  The
+        map-style access pattern every PyTorch-like loader wants;
+        tombstoned keys raise KeyError so samplers learn to re-draw (use
+        records() for streaming loaders)."""
         self._ensure_counts()
         n = len(self)
         if i < 0:
@@ -615,10 +600,9 @@ class Dataset:
         si = bisect_right(self._cum_counts, i)
         local = i - (self._cum_counts[si - 1] if si else 0)
         sp = os.path.join(self.path, self._names[si])
-        idx = codec.read_index(sp)
-        rec = codec.read_record_at(
+        rec = codec.read_nth_record(
             sp,
-            idx.offsets[local],
+            local,
             verify_checksums=self.verify_checksums,
             entry_names=self.entry_names,
         )

@@ -773,6 +773,68 @@ def test_corrupt_payload_fails_typed(tmp_path, monkeypatch):
                     pass
 
 
+def _typed(fn) -> None:
+    """Run ``fn``; a ShardPackError is an acceptable outcome, anything
+    else propagates and fails the test."""
+    try:
+        fn()
+    except C.ShardPackError:
+        pass
+
+
+def test_corrupt_index_and_key_prefix_fail_typed(tmp_path):
+    """A flipped bit or a truncation in the offset table or in a block's
+    key prefix (size field, key length, key bytes) either still reads or
+    raises a ShardPackError — never struct.error, UnicodeDecodeError or
+    MemoryError — through read_index, the key scan, both iter_records
+    paths (blocks average over 64 KiB, so skip_entries takes the
+    header-seek path), lookup and ds[i]."""
+    import random
+
+    from shardpack_spark.format.reader import open_dataset
+    from shardpack_spark.format.writer import write_records
+
+    root = str(tmp_path / "ds")
+    keys = [f"key/{i}" for i in range(3)]
+    write_records(root, [mk_record(k, k.encode() * 12000) for k in keys])
+    (shard,) = open_dataset(root).shards()
+    with open(shard, "rb") as f:
+        good = f.read()
+    idx = C.read_index(shard)
+    assert [k for _, k in C.iter_keys(shard)] == keys
+    spans = [(off, off + 12 + len(k)) for off, k in zip(idx.offsets, keys)]
+    spans.append((idx.index_start, idx.index_start + 8 + 8 * len(keys)))
+
+    def read_everything():
+        _typed(lambda: C.read_index(shard))
+        _typed(lambda: list(C.iter_keys(shard)))
+        _typed(lambda: list(C.iter_records(shard)))
+        _typed(lambda: list(C.iter_records(shard, skip_entries=True)))
+        ds = open_dataset(root)
+        for k in keys:
+            _typed(lambda: ds.lookup(k))
+        for i in range(len(ds)):
+            _typed(lambda: ds[i])
+
+    rng = random.Random(2025)
+    for trial in range(400):
+        lo, hi = rng.choice(spans)
+        pos = rng.randrange(lo, hi)
+        data = bytearray(good)
+        mode = trial % 4
+        if mode == 0:  # bit flip
+            data[pos] ^= 1 << rng.randrange(8)
+        elif mode == 1:  # plain truncation: the footer goes too
+            del data[pos:]
+        elif mode == 2:  # truncation with the old footer re-attached
+            data[pos:] = good[-16:]
+        else:  # the field cut short, everything after it shifted
+            del data[pos:hi]
+        with open(shard, "wb") as f:
+            f.write(data)
+        read_everything()
+
+
 def _zstd_cases():
     import numpy as np
 

@@ -204,17 +204,10 @@ def test_lookup_prunes_with_blooms(spark, tmp_path, monkeypatch):
     ds = open_dataset(base)
     n_shards = len(ds.shards())
     assert n_shards >= 10
-    opened = []
-    real = codec.iter_records
-
-    def counting(path, *a, **kw):
-        opened.append(path)
-        return real(path, *a, **kw)
-
-    monkeypatch.setattr(codec, "iter_records", counting)
+    opened = _counting(monkeypatch, "iter_keys")
     [rec] = ds.lookup("k/0123")
     assert rec.entries[0].data == b"v1123"
-    assert len(opened) <= max(3, n_shards // 10), (
+    assert 1 <= len(opened) <= max(3, n_shards // 10), (
         f"lookup opened {len(opened)} of {n_shards} shards — blooms not pruning"
     )
     opened.clear()
@@ -249,14 +242,7 @@ def test_lookup_many_parity_and_single_pass(spark, tmp_path, monkeypatch):
 
     # single pass: adjacent keys share a shard — the batch must not
     # reopen it per key (strictly fewer opens than sum of singles)
-    opened: list[str] = []
-    real = codec.iter_records
-
-    def counting(path, *a, **kw):
-        opened.append(path)
-        return real(path, *a, **kw)
-
-    monkeypatch.setattr(codec, "iter_records", counting)
+    opened = _counting(monkeypatch, "iter_keys")
     ds2 = open_dataset(base)
     ds2.lookup_many(keys)
     batched = len(opened)
@@ -264,7 +250,142 @@ def test_lookup_many_parity_and_single_pass(spark, tmp_path, monkeypatch):
     ds3 = open_dataset(base)
     for k in keys:
         ds3.lookup(k)
-    assert batched < len(opened), (batched, len(opened))
+    assert 1 <= batched < len(opened), (batched, len(opened))
+
+
+def _two_entry_records(n):
+    return [
+        codec.Record(
+            key=f"a/{i:04d}",
+            entries=[
+                codec.FileEntry("caption.txt", "text/plain", f"caption {i:04d}".encode()),
+                codec.FileEntry("image.bin", "image/x-raw", f"<image {i:04d}>".encode() * 8),
+            ],
+            metadata={"i": str(i)},
+        )
+        for i in range(n)
+    ]
+
+
+def _counting(monkeypatch, name):
+    """Count calls of ``codec.<name>``; returns the live list of their
+    positional arguments."""
+    calls: list = []
+    real = getattr(codec, name)
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(codec, name, counting)
+    return calls
+
+
+def test_lookup_decodes_only_matching_blocks(tmp_path, monkeypatch):
+    """A present key decodes exactly its own block; an absent key that
+    survives Bloom pruning key-scans its shard and decodes nothing."""
+    from shardpack_spark.format.writer import write_records
+
+    root = str(tmp_path / "ds")
+    write_records(root, _two_entry_records(60), target_shard_bytes=2048)
+    ds = open_dataset(root)
+    assert len(ds.shards()) >= 3
+    decoded = _counting(monkeypatch, "decode_record")
+    scanned = _counting(monkeypatch, "iter_keys")
+    [rec] = ds.lookup("a/0031")
+    assert rec.entries[1].data == b"<image 0031>" * 8
+    assert len(decoded) == 1 and len(scanned) >= 1
+    # an absent key inside a shard's key range that its Bloom filter
+    # cannot rule out (a false positive, found by search)
+    for j in range(20000):
+        scanned.clear()
+        decoded.clear()
+        assert ds.lookup(f"a/0031~{j}") == []
+        if scanned:
+            break
+    assert scanned, "no Bloom false positive found"
+    assert decoded == []
+    assert ds.metadata("a/0031") == {"i": "31"} and len(decoded) == 1
+
+
+def test_lookup_duplicate_keys_in_shard_order(tmp_path):
+    """Duplicate keys, within one shard and across shards, all come back
+    in shard order, and lookup_many agrees with lookup key by key."""
+    base = tmp_path / "dups"
+    base.mkdir()
+    layout = [[("dup", b"1"), ("x", b"x"), ("dup", b"2")], [("dup", b"3"), ("y", b"y")]]
+    for n, recs in enumerate(layout):
+        w = codec.ShardWriter(str(base / codec.shard_name("part", n)))
+        for key, data in recs:
+            w.write_record(
+                codec.Record(key=key, entries=[codec.FileEntry("d", "x/y", data)])
+            )
+        w.close()
+    ds = open_dataset(str(base))
+    assert [r.entries[0].data for r in ds.lookup("dup")] == [b"1", b"2", b"3"]
+    keys = ["dup", "x", "y", "nope"]
+    assert ds.lookup_many(keys) == {k: ds.lookup(k) for k in keys}
+    assert ds.lookup("nope") == [] and ds.metadata("nope") is None
+
+
+def test_corrupt_matched_record_is_caught(tmp_path):
+    """Corrupting the payload of the record a lookup or ds[i] returns
+    raises ShardPackChecksumError from both; a modality view that does
+    not decode the corrupt entry reads cleanly, with its true size; a
+    neighbour in the same shard is not decoded, so it reads cleanly."""
+    from shardpack_spark.format.writer import write_records
+
+    root = str(tmp_path / "ds")
+    write_records(root, _two_entry_records(5))
+    ds = open_dataset(root)
+    (shard,) = ds.shards()
+    i = [r.key for r in ds.records()].index("a/0002")
+    with open(shard, "rb") as f:
+        data = bytearray(f.read())
+    at = data.find(b"<image 0002>")
+    data[at] ^= 0x01
+    with open(shard, "wb") as f:
+        f.write(data)
+
+    ds = open_dataset(root)
+    with pytest.raises(codec.ShardPackChecksumError):
+        ds.lookup("a/0002")
+    with pytest.raises(codec.ShardPackChecksumError):
+        ds[i]
+    assert ds.lookup("a/0003")[0].entries[1].data == b"<image 0003>" * 8
+
+    view = open_dataset(root, entry_names=["caption.txt"])
+    for rec in (view.lookup("a/0002")[0], view[i]):
+        assert rec.key == "a/0002"
+        assert rec.entries[0].data == b"caption 0002"
+        assert rec.entries[1].data == b"" and rec.entries[1].size == 12 * 8
+
+    raw = open_dataset(root, verify_checksums=False)
+    assert raw.lookup("a/0002")[0].entries[1].data != b"<image 0002>" * 8
+    assert raw[i].entries[1].data == raw.lookup("a/0002")[0].entries[1].data
+
+
+def test_getitem_one_handle_matches_records(tmp_path):
+    """ds[i] over a multi-shard dataset enumerates records() in order,
+    takes negative indices, bounds-checks with IndexError and raises
+    KeyError for a tombstoned key."""
+    from shardpack_spark.format.writer import delete_keys, write_records
+
+    root = str(tmp_path / "ds")
+    write_records(root, _two_entry_records(40), target_shard_bytes=2048)
+    ds = open_dataset(root)
+    n = len(ds)
+    assert n == 40 and len(ds.shards()) >= 3
+    assert [ds[i].key for i in range(n)] == [r.key for r in ds.records()]
+    assert ds[-1].key == ds[n - 1].key and ds[-n].key == ds[0].key
+    for bad in (n, -n - 1):
+        with pytest.raises(IndexError):
+            ds[bad]
+    delete_keys(root, ["a/0007"])
+    ds = open_dataset(root)
+    with pytest.raises(KeyError):
+        ds[7]
+    assert ds[8].key == "a/0008"
 
 
 def test_adhoc_directory_without_commit_log(tmp_path):
